@@ -12,13 +12,15 @@ Layout contract (mirrors the reference's bucket layout, README.md:20-23):
     <sidecar_root>/schemas/<table>_schema.json     StructType sidecars
     <sidecar_root>/maps.json                       code→label dictionaries
 
-Per year: each table is read with its explicit schema (S1/S2), pushed
-through the convention engine (P3-P9) as one projection, sharded tables
-union by name (U1), and everything lands hive-partitioned by
-NU_ANO_CENSO (X3) — small tables as one file per partition (X1), fact
-tables sized by maxRecordsPerFile (X2 replacement). Years already in
-the sink are skipped (O1), so re-runs are idempotent. Years are
-mutually independent — the reference serialized them across Dataproc
+Per year: each table is read with its explicit schema (S1/S2) in ONE
+CSV scan — a sharded table's regional files are the scan's input list,
+not separate scans unioned afterwards (the explicit schema maps columns
+by position in every file, and each file's header is dropped) — pushed
+through the convention engine (P3-P9) as one projection, and lands
+hive-partitioned by NU_ANO_CENSO (X3) — small tables as one file per
+partition (X1), fact tables sized by maxRecordsPerFile (X2
+replacement). Years already in the sink are skipped (O1), so re-runs
+are idempotent. Years are mutually independent — the reference serialized them across Dataproc
 jobs (censo_escolar.py:145-148); here one Spark application processes
 any number of years and the scheduler parallelizes stages.
 """
@@ -31,11 +33,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from censo_escolar_spark.etl.maps import load_maps
-from censo_escolar_spark.etl.pipeline import (
-    missing_partitions,
-    transform_table,
-    union_shards,
-)
+from censo_escolar_spark.etl.pipeline import missing_partitions, transform_table
 from censo_escolar_spark.sources.readers import (
     load_csv_with_schema,
     load_schema_sidecar,
@@ -66,20 +64,17 @@ def load_year_table(
     year: int,
     maps: Mapping[str, Mapping[str, str]],
 ) -> DataFrame:
-    """S1/S2 → P3-P9 → U1 for one (table, year)."""
+    """S1/S2 → P3-P9 for one (table, year): one scan over every shard
+    file, one projection."""
     schema = load_schema_sidecar(
         os.path.join(sidecar_root, "schemas", f"{table}_schema.json")
     )
-    shards = [
-        transform_table(
-            load_csv_with_schema(spark, path, schema),
-            table=table,
-            year=year,
-            maps=maps,
-        )
-        for path in _table_files(raw_root, year, table)
-    ]
-    return shards[0] if len(shards) == 1 else union_shards(shards)
+    return transform_table(
+        load_csv_with_schema(spark, _table_files(raw_root, year, table), schema),
+        table=table,
+        year=year,
+        maps=maps,
+    )
 
 
 def run_census_job(

@@ -35,6 +35,7 @@ Year-conditional drift handling [transform.py:112-137]:
 
 from __future__ import annotations
 
+import posixpath
 from functools import reduce
 from typing import Mapping, Sequence
 
@@ -47,14 +48,23 @@ from censo_escolar_spark.functions.decode import (
     map_as_dimension,
     map_expr,
 )
+from censo_escolar_spark.sources.hadoopfs import (
+    hadoop_fs,
+    holds_data_file,
+    is_hidden,
+    list_entries,
+)
 
 #: Above this many entries a dict is decoded via broadcast LEFT join
-#: instead of an inline ``create_map`` literal. The reference's biggest
+#: instead of an inline map literal. The reference's biggest
 #: dicts (CO_IES 6,296 entries, CO_MUNICIPIO 5,570 — maps.json) would
 #: otherwise each become a 12k+-literal Catalyst expression; several such
 #: columns in one projection blow up analysis/codegen time and constant
 #: pool size, while a broadcast join ships the dict ONCE per executor.
 BROADCAST_DECODE_THRESHOLD = 1024
+
+#: Directory value Hive and Spark write for a NULL partition value.
+HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 #: Columns decoded as dates, per table (transform.py:104-109: escolas only).
 DATE_COLUMNS = {"escolas": ("DT_ANO_LETIVO_INICIO", "DT_ANO_LETIVO_TERMINO")}
@@ -203,31 +213,47 @@ def missing_partitions(
     sink_path: str,
     partition_col: str = "NU_ANO_CENSO",
 ) -> list[int]:
-    """O1: incremental anti-join — which wanted years are not yet in the sink.
+    """O1: which wanted years are not yet in the sink — one directory
+    listing on the driver, no Spark job.
 
     The reference lists bucket blobs with a regex (censo_escolar.py:39-60);
-    here the wanted set left-anti-joins the sink's partition values (a
-    metadata-only scan: partition pruning reads no row data).
-    """
-    from pyspark.errors import AnalysisException
+    here the sink's Hadoop FileSystem is listed with Spark's own
+    partition-discovery rules:
 
-    wanted_df = spark.createDataFrame([(int(y),) for y in wanted], f"{partition_col} int")
-    try:
-        existing = spark.read.parquet(sink_path).select(partition_col).distinct()
-    except AnalysisException as e:
-        # ONLY "sink does not exist yet" means everything is missing. A
-        # transient failure (permissions, bad mount) must raise — treating
-        # it as empty would re-append every year and duplicate the sink
-        # (the O1 idempotency guarantee, reference censo_escolar.py:39-60).
-        cond = getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
-        condition = cond() if cond is not None else None
-        # UNABLE_TO_INFER_SCHEMA = the directory exists but holds no
-        # parquet yet (first run died between mkdir and commit) — that is
-        # still "empty sink", not a transient failure.
-        if condition in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or (
-            "Path does not exist" in str(e) or "Unable to infer schema" in str(e)
-        ):
-            return [int(y) for y in wanted]
-        raise
-    remaining = wanted_df.join(existing, partition_col, "left_anti")
-    return sorted(r[0] for r in remaining.collect())
+    - ``_``/``.``-prefixed names (``_SUCCESS``, ``_temporary``, ``.crc``)
+      are ignored;
+    - a year is present only when its ``<partition_col>=<year>``
+      directory holds at least one non-hidden file (a first run that died
+      before committing leaves none);
+    - a missing or empty sink means every wanted year is missing;
+    - any other entry in the sink root (a loose file, a directory of
+      another name, a non-integer year) raises: a sink this function
+      cannot read must never look empty, or every year would be appended
+      again and the sink duplicated. Listing failures (permissions, bad
+      mount) raise for the same reason.
+    """
+    want = {int(y) for y in wanted}
+    fs, jvm = hadoop_fs(spark, sink_path)
+    prefix = f"{partition_col}="
+    present: set[int] = set()
+    for name, is_dir in list_entries(fs, jvm, sink_path):
+        if is_hidden(name):
+            continue
+        if not (is_dir and name.startswith(prefix)):
+            raise ValueError(
+                f"{sink_path}: entry {name!r} is not a {prefix}<year> partition "
+                "directory of a partitioned parquet sink"
+            )
+        value = name[len(prefix):]
+        if value == HIVE_NULL_PARTITION:  # a NULL year is never wanted
+            continue
+        try:
+            year = int(value)
+        except ValueError:
+            raise ValueError(
+                f"{sink_path}: partition directory {name!r} has a non-integer "
+                f"{partition_col}"
+            ) from None
+        if year in want and holds_data_file(fs, jvm, posixpath.join(sink_path, name)):
+            present.add(year)
+    return sorted(want - present)

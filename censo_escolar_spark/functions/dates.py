@@ -20,10 +20,10 @@ The remaining patterns are purely numeric and locale-independent.
 
 from __future__ import annotations
 
-from itertools import chain
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from censo_escolar_spark.functions.decode import string_map_lit
 
 MODERN_FORMAT = "dd/MM/yyyy"
 #: numeric-only pattern the SAS input is rewritten into (locale-proof)
@@ -45,9 +45,7 @@ def parse_census_date(col: str | Column, year: int) -> Column:
         return F.try_to_timestamp(c, F.lit(MODERN_FORMAT)).cast("date")
     # 01FEB2013:00:00:00 → 01 + "02" + 2013:00:00:00, then a numeric-only
     # parse. F.concat (not concat_ws) so an unmapped month nulls the row.
-    month_map = F.create_map(
-        *[F.lit(x) for x in chain.from_iterable(_SAS_MONTHS.items())]
-    )
+    month_map = string_map_lit(_SAS_MONTHS)
     normalized = F.concat(
         F.substring(c, 1, 2),
         month_map[F.upper(F.substring(c, 3, 3))],

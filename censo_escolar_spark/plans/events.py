@@ -3800,6 +3800,12 @@ _E45_OUT_SCHEMA = (
 )
 
 
+def e45_state_partitions(slots: int) -> int:
+    """e45's state-store partitions for ``slots`` task slots: half the
+    slots, within [4, 16] (16 at local[32], 4 at local[4])."""
+    return max(4, min(16, slots // 2))
+
+
 def _stateful_held_slices(spark: SparkSession, sf_dir: str):
     """e45's arrival: the sparse per-user lane (event_id % 13 == 0) in
     time-range thirds, every 7th sparse event of the MIDDLE third held
@@ -3881,21 +3887,22 @@ def e45_stateful_timeout_segments(spark: SparkSession, sf_dir: str) -> DataFrame
             .withWatermark("ts", f"{delay} seconds")
         )
         segs = user_activity_segments(stream, gap_s=gap)
-        # 16 state partitions, not the PARITY_SHUFFLE 4: this row's
-        # per-batch cost is the PYTHON update call per (key, batch) —
-        # more partitions mean more parallel Python workers, the
-        # opposite trade from the JVM-state parity rows (round-11
-        # warm in-session sweep: 6.3/4.9/4.5/4.8/5.3 s at 4/8/12/16/32;
-        # round-12 COLD sweep, first-invocation min-of-3 per fresh JVM:
-        # 11.6/8.9/7.6/9.7/11.2 s at 4/8/16/24/32 — 16 is the cold knee
-        # too; results are partition-count invariant and the checkpoint
-        # is per-run). SPARK_GRAFT_E45_STATE pins the value for sweep
+        # State partitions follow the task slots: this row's per-batch
+        # cost is the PYTHON update call per (key, batch), so partitions
+        # buy parallel Python workers only up to the slot count, and
+        # past it each one is pure per-batch overhead. On local[32]
+        # (cold sweep, min-of-3 per fresh JVM: 11.6/8.9/7.6/9.7/11.2 s
+        # at 4/8/16/24/32) the knee is 16 = half the slots; on local[4]
+        # over sf0.1 the pinned 16 took 17.6 s against 9.0 s at 4.
+        # Results are partition-count invariant and the checkpoint is
+        # per-run. SPARK_GRAFT_E45_STATE pins the value for sweep
         # measurement only, same role as SPARK_GRAFT_SPREAD_WIDTH.
         import os as _os
 
-        with state_shuffle(
-            spark, int(_os.environ.get("SPARK_GRAFT_E45_STATE", "16"))
-        ):
+        n_state = _os.environ.get("SPARK_GRAFT_E45_STATE") or e45_state_partitions(
+            spark.sparkContext.defaultParallelism
+        )
+        with state_shuffle(spark, int(n_state)):
             q = (
                 segs.writeStream.format("parquet")
                 .option("path", out)

@@ -6,18 +6,49 @@ re-planning (skew joins, partition coalescing), Arrow for any
 pandas-interchange path, and explicit shuffle-partition sizing.
 
 On a real cluster the same builder is used with ``master`` left to
-spark-submit; locally we default to ``local[N]``.
+spark-submit; locally we default to ``local[N]`` sized to the host
+(``local_resources``).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Mapping
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the local harness (local[32], 128 GiB). On a
-# 1000-executor cluster, shuffle.partitions should be ~2-3x total cores;
-# AQE coalesces down from there, so a high initial value is safe.
+#: Ceiling of the default driver heap, MiB.
+MAX_DEFAULT_HEAP_MB = 24 * 1024
+
+
+def local_resources(
+    env: Mapping[str, str], n_cpus: int, phys_bytes: int
+) -> tuple[str, str]:
+    """(task slots N for ``local[N]``, ``spark.driver.memory``) for a host.
+
+    Local mode runs every task slot inside ONE JVM, so both follow the
+    host: N = the cores this process may run on, heap = half the physical
+    RAM capped at ``MAX_DEFAULT_HEAP_MB`` (Xmx reserves, it does not
+    commit; 8g was enough at sf0.1 but the sf1 scale probe needed more —
+    32 concurrent verification tasks x shingle-set buffers).
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` in ``env`` override.
+    """
+    cpus = env.get("SPARK_GRAFT_CPUS") or str(max(1, n_cpus))
+    heap_mb = max(512, min(MAX_DEFAULT_HEAP_MB, phys_bytes // 2 // 2**20))
+    return cpus, env.get("SPARK_GRAFT_DRIVER_MEM") or f"{heap_mb}m"
+
+
+def _host() -> tuple[int, int]:
+    """(usable cores, physical RAM bytes) of this process's host."""
+    try:
+        n_cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # pragma: no cover - no affinity API (macOS)
+        n_cpus = os.cpu_count() or 1
+    return n_cpus, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+# On a 1000-executor cluster, shuffle.partitions should be ~2-3x total
+# cores; AQE coalesces down from there, so a high initial value is safe.
 _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -31,21 +62,15 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # Broadcast dimension tables aggressively: every dim in the star schema
     # (region/nation/customer/supplier/part at dim scale) is far below this.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Local mode runs all 32 task slots inside ONE JVM: heap must be sized
-    # for the machine (128 GiB harness), not Spark's 1g default — 8g was
-    # enough at sf0.1 but OOM'd the sf1 scale probe (32 concurrent
-    # verification tasks × shingle-set buffers). Xmx reserves, it does not
-    # commit; override via SPARK_GRAFT_DRIVER_MEM.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
 }
 
 
 def get_spark(app_name: str = "censo_escolar_spark", **overrides: str) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = local_resources(os.environ, *_host())
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    conf = dict(_LOCAL_DEFAULTS)
+    conf = dict(_LOCAL_DEFAULTS, **{"spark.driver.memory": driver_mem})
     conf.update({k: str(v) for k, v in overrides.items()})
     # Measurement hook (same role as SPARK_GRAFT_SPREAD_WIDTH): lets a
     # cold-JVM A/B arm override session confs without a code edit, e.g.

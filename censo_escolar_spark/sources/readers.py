@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterable
+from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -157,7 +157,7 @@ def load_schema_sidecar(path: str) -> StructType:
 
 def load_csv_with_schema(
     spark: SparkSession,
-    path: str,
+    path: str | Sequence[str],
     schema: StructType,
     *,
     delimiter: str = "|",
@@ -171,12 +171,13 @@ def load_csv_with_schema(
     charset names strictly and rejects the reference's "utf8"). With an explicit schema Spark's
     vectorized CSV reader runs a single pass and malformed cells become
     NULL (PERMISSIVE mode), which is the null-on-error semantics the
-    reference gets from its UDFs.
+    reference gets from its UDFs. ``path`` may be a list of files (e.g. a
+    table's regional shards): one scan, the header dropped per file.
     """
     return (
         spark.read.options(header=header, delimiter=delimiter, encoding=encoding)
         .schema(schema)
-        .csv(path)
+        .csv(path if isinstance(path, str) else list(path))
     )
 
 

@@ -42,6 +42,8 @@ import posixpath
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from censo_escolar_spark.sources.hadoopfs import hadoop_fs, list_children
+
 #: Fixture-sized default; thousands at 100 TB.
 N_BUCKETS = 8
 
@@ -49,13 +51,6 @@ N_BUCKETS = 8
 #: to Spark's data-path listings).
 _COMPACT_TMP = "_compact_tmp_"
 _COMPACT_COMMIT = "_compact_commit_"
-
-
-def hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, jvm) for ``path`` via the session's Hadoop conf."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
 
 
 def _jpath(jvm, *parts: str):
@@ -82,14 +77,6 @@ def checked_rename(fs, src, dst) -> None:
     marker in place so ``_recover`` retries phase 2."""
     if not fs.rename(src, dst):
         raise IOError(f"hadoop rename returned false: {src} -> {dst}")
-
-
-def list_children(fs, jvm, dir_path: str) -> list[str]:
-    """Child names of ``dir_path`` ([] when it doesn't exist)."""
-    p = _jpath(jvm, dir_path)
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 def bucket_of(key_col: str, *, n_buckets: int = N_BUCKETS) -> Column:

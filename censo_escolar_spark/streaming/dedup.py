@@ -60,11 +60,10 @@ from censo_escolar_spark.operators.dedup import (
     incremental_dedup_indexed,
     minhash_sketches,
 )
+from censo_escolar_spark.sources.hadoopfs import hadoop_fs, list_children
 from censo_escolar_spark.streaming.bucketstate import (
     checked_delete,
     checked_rename,
-    hadoop_fs,
-    list_children,
 )
 
 #: Band-hash bucket count for the stored index layout. Fixture-sized

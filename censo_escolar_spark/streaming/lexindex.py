@@ -324,7 +324,7 @@ def _live_components(
     """(live postings, live doclens, had_tombstones) below ``hi`` —
     tombstone anti-joins applied only when a deletes component exists,
     so delete-free stores keep their exact pre-delete plans."""
-    from censo_escolar_spark.streaming.dedup import hadoop_fs, list_children
+    from censo_escolar_spark.sources.hadoopfs import hadoop_fs, list_children
 
     droot = _component(state_dir, "deletes")
     fs, jvm = hadoop_fs(spark, droot)

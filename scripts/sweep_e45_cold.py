@@ -41,14 +41,14 @@ def main() -> None:
 
         yield from batches
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     run(spark.range(0, 100 * cpus, 1, cpus).mapInPandas(_warm, "id long"))
 
     t0 = time.perf_counter()
     run(queries["e45_stateful_timeout_segments"](spark, sf_dir))
     el = time.perf_counter() - t0
     print(
-        f"E45_COLD state={os.environ.get('SPARK_GRAFT_E45_STATE', '16')}"
+        f"E45_COLD state={os.environ.get('SPARK_GRAFT_E45_STATE', 'auto')}"
         f" {el:.2f}s",
         flush=True,
     )

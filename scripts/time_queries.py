@@ -51,7 +51,7 @@ def main() -> None:
 
         yield from batches
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     run(spark.range(0, 100 * cpus, 1, cpus).mapInPandas(_warm, "id long"))
 
     if prime:

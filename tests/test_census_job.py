@@ -117,3 +117,24 @@ def test_job_end_to_end(spark, layout):
     )
     assert ran3["escolas"] == [2014]
     assert spark.read.parquet(os.path.join(out, "escolas")).count() == 5
+
+
+def test_sharded_table_reaches_the_sink_through_one_scan(spark, layout):
+    """The five regional shards of a (table, year) are ONE CSV scan and
+    one projection: no Union in the plan, every shard among the scan's
+    input files, and the rows of all five shards decoded."""
+    from censo_escolar_spark.etl.job import load_year_table
+    from censo_escolar_spark.etl.maps import load_maps
+
+    raw, side, _ = layout
+    maps = load_maps(os.path.join(side, "maps.json"))
+    df = load_year_table(spark, raw, side, "matricula", 2013, maps)
+    qe = df._jdf.queryExecution()
+    for plan in (qe.analyzed(), qe.optimizedPlan()):
+        assert "Union" not in plan.toString()
+    assert sorted(os.path.basename(f) for f in df.inputFiles()) == sorted(
+        f"matricula_{r}.csv" for r in REGIONS
+    )
+    rows = df.collect()
+    assert len(rows) == 2 * len(REGIONS)
+    assert sorted(r.IN_TRANSPORTE_PUBLICO for r in rows) == [False] * 5 + [True] * 5

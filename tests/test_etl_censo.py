@@ -432,3 +432,53 @@ def test_missing_partitions_empty_dir_is_empty_sink(spark, tmp_path):
     empty = tmp_path / "empty_sink"
     empty.mkdir()
     assert missing_partitions(spark, [2011, 2012], str(empty)) == [2011, 2012]
+
+
+def test_missing_partitions_starts_no_spark_job(spark, tmp_path):
+    """O1 bookkeeping is a directory listing: no Spark job per call."""
+    sink = str(tmp_path / "listed")
+    df = spark.createDataFrame([(2013, "a"), (2016, "b")], "NU_ANO_CENSO int, v string")
+    write_single_file(df, sink, ["NU_ANO_CENSO"])
+    tracker = spark.sparkContext.statusTracker()
+    before = sorted(tracker.getJobIdsForGroup())
+    assert missing_partitions(spark, [2013, 2016, 2020], sink) == [2020]
+    assert missing_partitions(spark, [2011], str(tmp_path / "absent")) == [2011]
+    assert sorted(tracker.getJobIdsForGroup()) == before
+
+
+def test_missing_partitions_ignores_hidden_entries(spark, tmp_path):
+    """Spark's partition-discovery rule: ``_``/``.`` names are not data —
+    a committed year next to _SUCCESS, .crc checksums, a half-written
+    _temporary/ attempt and a NULL-year partition is present, and nothing
+    else is; a directory that is no year partition raises."""
+    sink = tmp_path / "hidden"
+    df = spark.createDataFrame([(2013, "a"), (None, "b")], "NU_ANO_CENSO int, v string")
+    write_single_file(df, str(sink), ["NU_ANO_CENSO"])
+    assert (sink / "_SUCCESS").exists()
+    assert (sink / "NU_ANO_CENSO=__HIVE_DEFAULT_PARTITION__").exists()
+    (sink / "._SUCCESS.crc").write_text("")
+    (sink / "_temporary" / "0" / "NU_ANO_CENSO=2016").mkdir(parents=True)
+    (sink / "_temporary" / "0" / "NU_ANO_CENSO=2016" / "part-0.parquet").write_text("x")
+    assert missing_partitions(spark, [2013, 2016], str(sink)) == [2016]
+    # a sink holding only hidden entries is an empty sink
+    bare = tmp_path / "bare"
+    (bare / "_temporary").mkdir(parents=True)
+    (bare / "_SUCCESS").write_text("")
+    assert missing_partitions(spark, [2013], str(bare)) == [2013]
+    (bare / "other=1").mkdir()
+    with pytest.raises(ValueError, match="other=1"):
+        missing_partitions(spark, [2013], str(bare))
+
+
+def test_missing_partitions_year_with_only_hidden_files_is_missing(spark, tmp_path):
+    """A year directory whose only files are hidden (an attempt that died
+    before committing its part file) does not count as written."""
+    sink = tmp_path / "uncommitted"
+    year = sink / "NU_ANO_CENSO=2014"
+    year.mkdir(parents=True)
+    (year / ".part-0.parquet.crc").write_text("")
+    (year / "_temporary").mkdir()
+    (year / "_temporary" / "part-0.parquet").write_text("x")
+    df = spark.createDataFrame([(2013, "a")], "NU_ANO_CENSO int, v string")
+    write_single_file(df, str(sink), ["NU_ANO_CENSO"])
+    assert missing_partitions(spark, [2013, 2014], str(sink)) == [2014]

@@ -20,16 +20,36 @@ cell = st.one_of(
 
 MAP = {"1": "um", "2": "dois"}
 
+# Map keys and labels that break naive literal building: quotes,
+# commas, backslashes, line breaks, the empty string, non-ASCII text.
+map_text = st.one_of(
+    st.text(max_size=8),
+    st.sampled_from(['"', "'", ",", "", "a,b", 'x"y', "it's", "\\", "\n",
+                     "ção", "São Paulo", "日本語", "🙂", " "]),
+)
+
 
 @settings(max_examples=30, deadline=None)
-@given(st.lists(st.tuples(cell, cell, cell), min_size=1, max_size=30))
-def test_convention_rules_hold_for_arbitrary_cells(spark, rows):
+@given(
+    st.lists(st.tuples(cell, cell, cell), min_size=1, max_size=30),
+    st.dictionaries(map_text, map_text, max_size=8),
+)
+def test_convention_rules_hold_for_arbitrary_cells(spark, rows, tricky):
+    # TP_Y decodes through the generated map: every key of it once, then
+    # the row's arbitrary TP cell (mostly misses)
+    keys = list(tricky)
+    rows = rows + [(None, None, None)] * max(0, len(keys) - len(rows))
+    ys = keys + [tp for tp, _, _ in rows[len(keys):]]
     df = spark.createDataFrame(
-        rows, "TP_X string, IN_X string, NU_X string"
+        [r + (y,) for r, y in zip(rows, ys)],
+        "TP_X string, IN_X string, NU_X string, TP_Y string",
     )
-    out = apply_conventions(df, table="t", year=2020, maps={"TP_X": MAP}).collect()
-    for (tp, in_, nu), r in zip(rows, out):
+    out = apply_conventions(
+        df, table="t", year=2020, maps={"TP_X": MAP, "TP_Y": tricky}
+    ).collect()
+    for (tp, in_, nu), y, r in zip(rows, ys, out):
         assert r["TP_X"] == MAP.get(tp), f"dict.get semantics broke for {tp!r}"
+        assert r["TP_Y"] == tricky.get(y), f"dict.get semantics broke for {y!r} in {tricky!r}"
         assert r["IN_X"] == ({"1": True, "0": False}.get(in_)), f"bool rule broke for {in_!r}"
         # try_cast int semantics: python int() on the trimmed literal,
         # else NULL. Spark's string->int cast trims EVERY char <= 0x20
