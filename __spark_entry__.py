@@ -3,7 +3,8 @@
 ``entry(spark)`` runs the flagship query at sf0.001 (smoke);
 ``queries()`` exposes every implemented operator as (spark, sf_dir) ->
 DataFrame; ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL the
-driver hash-compares against at sf0.01.
+driver hash-compares against at sf0.01. Both list the registry in
+registration order.
 
 The implementations live in the ``censo_escolar_spark`` package; this
 module only aggregates the registries.
@@ -32,98 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q01_pricing_summary"](spark, SMOKE_SF_DIR)
 
 
-# The driver's correctness sweep walks queries() in dict order and grades
-# only the first ~50 it has budget for (each CORRECTNESS_r0X is a
-# registration-order prefix).  As of round 6 the union of green rows
-# across CORRECTNESS_r01..r06 covers ALL 199 queries registered then
-# (zero red, zero never-graded).  The sweep ROTATES STALE EVIDENCE:
-# queries with no artifact row (new this round) grade first, then
-# greens ordered by the round of their LATEST green row, oldest first —
-# r2 evidence predates five rounds of refactors and re-greens before
-# anything fresher.  CORRECTNESS_r06 regraded all 16 remaining
-# r1-evidence rows and 26 r2-evidence rows green (plus the 8 round-6
-# additions), so tier 1 is empty and those 50 now carry r6 evidence.
-# CORRECTNESS_r07 graded a 50-row window all green (the 6 round-7
-# additions + the 14 remaining r2-evidence rows + the 30 oldest
-# r3-evidence rows), emptying tiers 1 and 2.  CORRECTNESS_r08 graded
-# another all-green 50 (the 16 round-8 additions + the 13 remaining
-# r3-evidence rows + the 21 oldest r4 rows), emptying tier 3.
-# CORRECTNESS_r09 graded another all-green 50 (the 9 round-9 additions
-# + the 21 remaining r4-evidence rows + the 20 oldest r5 rows: c01,
-# e01–e19), emptying tier 4.  CORRECTNESS_r10 graded another all-green
-# 50 (the 8 round-10 additions + the 30 remaining r5-evidence rows +
-# the oldest r6 rows: d01–d08, e36, m01, m09, m10), emptying tier 5.
-# Round 11 adds e47, e48, e49, m15, m16 (each bitwise-exact in the sim
-# at sf0.01 AND sf0.1) — no artifact row yet, so they grade first;
-# behind them the window regrades the 38 remaining r6-evidence rows,
-# then the oldest r7 rows.
-# Provenance: computed from the artifacts, never from judge re-runs
-# (advisory only).
-_LAST_GREEN_ROUND = {
-    6: {
-        "d09", "d21", *(f"t{i}" for i in range(34, 38)),
-        "q08", "q09", "q10", "q11", "q12", "q14", "q15", "q16", "q17",
-        "q18", "q19", "q21", "q22", "q23", "q24", "q25",
-        *(f"s{i:02d}" for i in range(1, 6)),
-        "t01", *(f"t{i:02d}" for i in range(3, 13)),
-    },
-    7: {
-        "d10", "d15", "d16", "d17", "d18",
-        *(f"e{i}" for i in range(25, 33)),
-        "e37", "g02", "m05", "m06", "m07", "m11", "m12",
-        *(f"q{i:02d}" for i in range(1, 8)),
-        "q73",
-        "s06", *(f"s{i}" for i in range(11, 18)),
-        "s21",
-        "t02", *(f"t{i:02d}" for i in range(13, 18)),
-        *(f"t{i}" for i in range(26, 32)),
-        "t38",
-    },
-    8: {
-        "d19", "d22", "e33", *(f"e{i}" for i in range(38, 43)),
-        "m02", "m03", "m13",
-        *(f"q{i}" for i in range(26, 41)),
-        "q60", "q61", *(f"q{i}" for i in range(63, 72)),
-        "s18", *(f"s{i}" for i in range(22, 28)),
-        "t19", "t32", "t33", *(f"t{i}" for i in range(39, 42)),
-    },
-    9: {
-        "c01", "d23", "d24",
-        *(f"e{i:02d}" for i in range(1, 20)),
-        "e43", "e44",
-        *(f"q{i}" for i in range(41, 60)),
-        "q62", "q72", "q74",
-        "s28", "s29", "t42", "t43",
-    },
-    10: {
-        "c02", "d11", "d12", "d13", "d14", "d20", "d25",
-        *(f"e{i:02d}" for i in range(20, 25)),
-        "e35", "e36", "e45", "e46", "g01",
-        "m01", "m04", "m08", "m09", "m10", "m14",
-        "q13", "q20", "q75",
-        "s07", "s08", "s09", "s10", "s19", "s20", "s30", "s31",
-        "t18", *(f"t{i}" for i in range(20, 26)), "t44",
-        *(f"d{i:02d}" for i in range(1, 9)),
-    },
-}
-_EVIDENCE_AGE = {p: r for r, ps in _LAST_GREEN_ROUND.items() for p in ps}
-
-
-def _sweep_order(names) -> list[str]:
-    def tier(n: str) -> int:
-        p = n.split("_", 1)[0]
-        # no artifact row yet (new this round) -> before every green
-        return _EVIDENCE_AGE.get(p, 0)
-
-    order = {n: i for i, n in enumerate(names)}
-    return sorted(names, key=lambda n: (tier(n), order[n]))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {n: QUERIES[n] for n in _sweep_order(QUERIES)}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle for each query (where expressible)."""
-    return {n: ORACLE[n] for n in _sweep_order(QUERIES) if n in ORACLE}
+    return dict(ORACLE)

@@ -36,7 +36,6 @@ Year-conditional drift handling [transform.py:112-137]:
 from __future__ import annotations
 
 import posixpath
-from functools import reduce
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -83,15 +82,6 @@ RENAMES = {
     "IN_ALOJAM_PROFESSOR": "IN_DORMITORIO_PROFESSOR",
     "CO_LINGUA_INDIGENA": "CO_LINGUA_INDIGENA_1",
 }
-
-
-def prefix_columns(df: DataFrame, prefix: str) -> DataFrame:
-    """P1: alias every column to ``{prefix}_{column}`` — one projection.
-
-    (Defined-but-never-called in the reference, transform.py:21-23;
-    shipped here because namespacing columns before a wide join is the
-    actual use the reference anticipated.)"""
-    return df.select([F.col(c).alias(f"{prefix}_{c}") for c in df.columns])
 
 
 def decode_column(
@@ -198,13 +188,6 @@ def transform_table(
     out = merge_or_columns(out, table=table, year=year)
     out = rename_drifted_columns(out, table=table, year=year)
     return out
-
-
-def union_shards(shards: Sequence[DataFrame]) -> DataFrame:
-    """U1: n-ary union of regional shards. unionByName (not positional
-    unionAll as the reference, transform.py:151-152) so column-order drift
-    across shards can never silently mis-align data."""
-    return reduce(DataFrame.unionByName, shards)
 
 
 def missing_partitions(

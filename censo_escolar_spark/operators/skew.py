@@ -85,21 +85,12 @@ def spread_small_input(
     cap is inert and the gate (already-wide inputs skip the shuffle)
     still decides.
 
-    ``SPARK_GRAFT_NO_SPREAD=1`` disables every spread site at once — the
-    measurement kill-switch for cold-JVM A/B adjudication of the spread
-    (results are identical either way; only the physical plan changes).
-    ``SPARK_GRAFT_SPREAD_WIDTH=<n>`` pins the width (same purpose).
+    Results are identical with or without the spread; only the physical
+    plan changes. A width sweep patches ``TARGET_SPREAD_ROWS`` from outside.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return target
-    sc = target.sparkSession.sparkContext
-    width = int(os.environ.get("SPARK_GRAFT_SPREAD_WIDTH", "0"))
-    if not width:
-        width = sc.defaultParallelism
-        if rows is not None and rows >= 0:
-            width = max(2, min(width, -(-int(rows) // TARGET_SPREAD_ROWS)))
+    width = target.sparkSession.sparkContext.defaultParallelism
+    if rows is not None and rows >= 0:
+        width = max(2, min(width, -(-int(rows) // TARGET_SPREAD_ROWS)))
     probe = target if gate is None else gate
     if probe.rdd.getNumPartitions() < width:
         return target.repartition(width, *[F.col(c) for c in key_cols])

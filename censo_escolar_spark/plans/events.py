@@ -3895,14 +3895,9 @@ def e45_stateful_timeout_segments(spark: SparkSession, sf_dir: str) -> DataFrame
         # at 4/8/16/24/32) the knee is 16 = half the slots; on local[4]
         # over sf0.1 the pinned 16 took 17.6 s against 9.0 s at 4.
         # Results are partition-count invariant and the checkpoint is
-        # per-run. SPARK_GRAFT_E45_STATE pins the value for sweep
-        # measurement only, same role as SPARK_GRAFT_SPREAD_WIDTH.
-        import os as _os
-
-        n_state = _os.environ.get("SPARK_GRAFT_E45_STATE") or e45_state_partitions(
-            spark.sparkContext.defaultParallelism
-        )
-        with state_shuffle(spark, int(n_state)):
+        # per-run. A sweep patches ``e45_state_partitions`` from outside.
+        n_state = e45_state_partitions(spark.sparkContext.defaultParallelism)
+        with state_shuffle(spark, n_state):
             q = (
                 segs.writeStream.format("parquet")
                 .option("path", out)

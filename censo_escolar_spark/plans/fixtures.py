@@ -87,9 +87,8 @@ def prime(spark: SparkSession, sf_dir: str) -> None:
     from concurrent.futures import ThreadPoolExecutor
 
     builders = (
-        # Longest chains FIRST: with a bounded pool the makespan is set
-        # by when the longest chain STARTS + its duration (classic LPT
-        # scheduling); measured per-builder times are in the comments.
+        # Longest chains first, one pool worker each; measured
+        # per-builder times are in the comments.
         image_deletes_store,     # ~20 s chain: image base (3 applies) + 2 (m12/m15/m16)
         dedup_full_store,        # ~19 s chain: real stream (2 batches) + 1 apply (d19/d22/d23/d25)
         lex_deletes_store,       # ~17 s chain: lex base (2) + delete + ingest (t40/t41/t44)
@@ -103,7 +102,6 @@ def prime(spark: SparkSession, sf_dir: str) -> None:
         ivfpq_base,              # ~10 s (s30)
         ivf_plain_base,          # ~8 s (s31)
     )
-    import os
     import sys
     import time
 
@@ -115,9 +113,8 @@ def prime(spark: SparkSession, sf_dir: str) -> None:
             file=sys.stderr,
         )
 
-    workers = int(os.environ.get("SPARK_GRAFT_PRIME_POOL", "0")) or len(builders)
     with state_shuffle(spark, PARITY_SHUFFLE):
-        with ThreadPoolExecutor(max_workers=workers) as pool:
+        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
             futures = [pool.submit(timed, b) for b in builders]
             for f in futures:
                 f.result()

@@ -196,6 +196,18 @@ def d06_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: d07/s03/s05 re-enter the vectors with vec_id < _PLANTED_DUPS under
+#: vec_id + 100000: identical vectors, so the near-dup pairs are known.
+_PLANTED_DUPS = 100
+
+
+def _with_planted_dups(emb: DataFrame) -> DataFrame:
+    dups = emb.filter(F.col("vec_id") < _PLANTED_DUPS).select(
+        (F.col("vec_id") + F.lit(100000)).alias("vec_id"), "embedding"
+    )
+    return emb.unionByName(dups)
+
+
 # ---------------------------------------------------------------------------
 # d07 — embedding-cosine near-dup dedup, end to end: candidate pairs via
 # banded hyperplane LSH, exact cosine verification, transitive closure,
@@ -240,11 +252,8 @@ ORDER BY vec_id
 @register("d07_embedding_dedup", oracle=_D07_ORACLE)
 def d07_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dups = emb.filter(F.col("vec_id") < 100).select(
-        (F.col("vec_id") + F.lit(100000)).alias("vec_id"), "embedding"
-    )
     return similarity.cosine_dedup_clusters(
-        emb.unionByName(dups), threshold=0.9
+        _with_planted_dups(emb), threshold=0.9
     ).orderBy("vec_id")
 
 
@@ -462,11 +471,8 @@ def s04_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s03_lsh_bucketed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dups = emb.filter(F.col("vec_id") < 100).select(
-        (F.col("vec_id") + F.lit(100000)).alias("vec_id"), "embedding"
-    )
     return similarity.lsh_bucketed_pairs(
-        emb.unionByName(dups), dim=64, threshold=0.9
+        _with_planted_dups(emb), dim=64, threshold=0.9
     ).orderBy("id_a", "id_b")
 
 
@@ -497,10 +503,7 @@ def s03_lsh_bucketed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s05_ivf_bucketed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    dups = emb.filter(F.col("vec_id") < 100).select(
-        (F.col("vec_id") + F.lit(100000)).alias("vec_id"), "embedding"
-    )
-    allv = emb.unionByName(dups)
+    allv = _with_planted_dups(emb)
     # auto-sized cells (occupancy-targeted, floor 8 at graded fixtures):
     # identical vectors share a nearest centroid at ANY cell count, so the
     # planted-dup result is invariant while within-cell quadratic work
@@ -511,8 +514,8 @@ def s05_ivf_bucketed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         allv,
         centroids,
         threshold=0.9,
-        # corpus = embeddings + the 100 planted dups; footer metadata only
-        n_rows=None if emb_rows is None else emb_rows + 100,
+        # corpus = embeddings + the planted dups; footer metadata only
+        n_rows=None if emb_rows is None else emb_rows + _PLANTED_DUPS,
     ).orderBy("id_a", "id_b")
 
 

@@ -47,38 +47,52 @@ def _host() -> tuple[int, int]:
     return n_cpus, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 
 
-# On a 1000-executor cluster, shuffle.partitions should be ~2-3x total
-# cores; AQE coalesces down from there, so a high initial value is safe.
-_LOCAL_DEFAULTS: dict[str, str] = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": "32",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
+#: Spark's stock value is replaced wherever the session holds anything.
+_ANY = "*"
+
+#: The engine's session confs: name -> (engine value, stock value).
+#: ``get_spark`` sets every engine value when it builds a session.
+#: ``ensure_session_tuned`` patches a session the engine did not build: it
+#: sets an entry only while the session still holds Spark's stock value
+#: (or none), so a caller who tuned their own session deliberately is never
+#: clobbered. A stock value of ``None`` leaves the entry to the build: it
+#: is static, or Spark's own default already.
+_SESSION_CONFS: dict[str, tuple[str, str | None]] = {
+    "spark.sql.adaptive.enabled": ("true", None),
+    "spark.sql.adaptive.coalescePartitions.enabled": ("true", None),
+    "spark.sql.adaptive.skewJoin.enabled": ("true", None),
+    # 200 shuffle tasks over kB-scale local partitions is pure scheduler
+    # overhead; AQE coalesces *down* from the initial number, so a small
+    # initial value is right for the harness and a large one for clusters
+    # (~2-3x total cores on a 1000-executor cluster).
+    "spark.sql.shuffle.partitions": ("32", "200"),
+    # Arrow makes toPandas()/createDataFrame batch-columnar (10-100x).
+    "spark.sql.execution.arrow.pyspark.enabled": ("true", "false"),
+    # Deterministic wall-clock semantics: TIMESTAMP_NTZ <-> epoch
+    # conversions (operators/rangejoin.py) are exact under UTC and the
+    # DuckDB oracle compares naive timestamps. Pinned on every session.
+    "spark.sql.session.timeZone": ("UTC", _ANY),
     # Partition files into ~128 MB tasks (Spark default; stated explicitly
     # because output sizing at 100 TB depends on it).
-    "spark.sql.files.maxPartitionBytes": "134217728",
+    "spark.sql.files.maxPartitionBytes": ("134217728", None),
     # Broadcast dimension tables aggressively: every dim in the star schema
     # (region/nation/customer/supplier/part at dim scale) is far below this.
-    "spark.sql.autoBroadcastJoinThreshold": "64m",
-    "spark.ui.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": ("64m", "10485760b"),
+    "spark.ui.enabled": ("false", None),
 }
 
 
 def get_spark(app_name: str = "censo_escolar_spark", **overrides: str) -> SparkSession:
-    """Build (or get) a SparkSession with engine defaults applied."""
+    """Build (or get) a SparkSession with every engine conf applied.
+
+    ``overrides`` replace engine confs for this build; the host sizes
+    ``local[N]`` and the driver heap (``local_resources``).
+    """
     cpus, driver_mem = local_resources(os.environ, *_host())
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    conf = dict(_LOCAL_DEFAULTS, **{"spark.driver.memory": driver_mem})
+    conf = {k: value for k, (value, _) in _SESSION_CONFS.items()}
+    conf["spark.driver.memory"] = driver_mem
     conf.update({k: str(v) for k, v in overrides.items()})
-    # Measurement hook (same role as SPARK_GRAFT_SPREAD_WIDTH): lets a
-    # cold-JVM A/B arm override session confs without a code edit, e.g.
-    # SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.enabled=false;k2=v2".
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in filter(None, extra.split(";")):
-        k, _, v = pair.partition("=")
-        conf[k.strip()] = v.strip()
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -88,25 +102,6 @@ def get_spark(app_name: str = "censo_escolar_spark", **overrides: str) -> SparkS
 
 #: Sessions already tuned (built by get_spark, or patched in place).
 _TUNED_SESSIONS: set[int] = set()
-
-#: Runtime-settable confs applied to externally-built (bare) sessions.
-#: Keyed by conf name -> (bad_default, engine_value): each conf is only
-#: overridden when it still holds Spark's out-of-the-box default, so a
-#: caller who tuned their own session deliberately is never clobbered.
-_RUNTIME_TUNING: dict[str, tuple[str | None, str]] = {
-    # 200 shuffle tasks over kB-scale local partitions is pure scheduler
-    # overhead; AQE coalesces *down* from the initial number, so a small
-    # initial value is right for the harness and a large one for clusters.
-    "spark.sql.shuffle.partitions": ("200", "32"),
-    # Arrow makes toPandas()/createDataFrame batch-columnar (10-100x).
-    "spark.sql.execution.arrow.pyspark.enabled": ("false", "true"),
-    # Deterministic wall-clock semantics: TIMESTAMP_NTZ <-> epoch
-    # conversions (operators/rangejoin.py) are exact under UTC and the
-    # DuckDB oracle compares naive timestamps.
-    "spark.sql.session.timeZone": (None, "UTC"),
-    # Star-schema dims are all far below 64 MB; broadcast them.
-    "spark.sql.autoBroadcastJoinThreshold": ("10485760b", "64m"),
-}
 
 
 def ensure_session_tuned(spark: SparkSession) -> SparkSession:
@@ -122,10 +117,12 @@ def ensure_session_tuned(spark: SparkSession) -> SparkSession:
     """
     if id(spark) in _TUNED_SESSIONS:
         return spark
-    for key, (bad_default, value) in _RUNTIME_TUNING.items():
+    for key, (value, stock) in _SESSION_CONFS.items():
+        if stock is None:
+            continue
         try:
             current = spark.conf.get(key, None)
-            if bad_default is None or current is None or current == bad_default:
+            if stock == _ANY or current is None or current == stock:
                 spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static/unknown conf on some builds
             pass

@@ -46,36 +46,41 @@ TEST_TABLES = (
 #: exact file state, so reads are byte-for-byte the same plans.
 _SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
 
-#: (abspath, mtime_ns, size) -> parquet footer row count. Same stat-keyed
+#: (abspath, mtime_ns, size) -> parquet footer row count, or None when
+#: the entry is not readable as one parquet file. Same stat-keyed
 #: discipline as the schema cache: the value is file METADATA (the footer
 #: num_rows), read once per file state via pyarrow on the driver — never
 #: a computed result. Used to size scale-aware repartition widths
 #: (operators/skew.spread_small_input) without a count() job.
-_ROWS_CACHE: dict[tuple[str, int, int], int] = {}
+_ROWS_CACHE: dict[tuple[str, int, int], int | None] = {}
 
 
 def table_rows(sf_dir: str, name: str) -> int | None:
     """Row count of a scale-factor table from its parquet footer
     (None when the file is missing or unreadable as local parquet —
     callers treat None as "unknown" and fall back to core-count
-    behavior). Driver-side metadata only: no Spark job."""
+    behavior). Driver-side metadata only: no Spark job.
+
+    A directory-style table (Spark's ``part-*`` files) is None too.
+    Summing its part-file footers would be exact, but it would change the
+    spread width of the rows that read one (s01/t39 on 500 documents at
+    local[4]: 4 → 2 with ``TARGET_SPREAD_ROWS = 320``), a performance
+    change to be measured on its own."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
     except OSError:
         return None
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    hit = _ROWS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    try:
-        import pyarrow.parquet as pq
+    if key not in _ROWS_CACHE:
+        try:
+            import pyarrow.parquet as pq
 
-        n = pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-    _ROWS_CACHE[key] = int(n)
-    return int(n)
+            with pq.ParquetFile(path) as f:
+                _ROWS_CACHE[key] = int(f.metadata.num_rows)
+        except Exception:
+            _ROWS_CACHE[key] = None
+    return _ROWS_CACHE[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

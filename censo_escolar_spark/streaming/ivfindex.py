@@ -249,38 +249,6 @@ def ivf_topk_incremental(
     return topk_against_index(index, probes, k=k)
 
 
-def maintain_ivf_index(
-    vectors: DataFrame,
-    *,
-    state_dir: str,
-    checkpoint: str,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    compact_every: int | None = COMPACT_EVERY,
-) -> None:
-    """Drain everything currently available through the index maintainer
-    (availableNow trigger — the test/backfill entry point; a production
-    embedding stream runs the same query continuously)."""
-    q = (
-        vectors.writeStream.foreachBatch(
-            lambda df, bid: apply_ivf_index_batch(
-                df,
-                bid,
-                state_dir=state_dir,
-                centroids=centroids,
-                id_col=id_col,
-                vec_col=vec_col,
-                compact_every=compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def ivf_topk_incremental_filtered(
     spark: SparkSession,
     state_dir: str,

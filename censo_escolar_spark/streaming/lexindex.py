@@ -80,7 +80,7 @@ def _bucket(col) -> Column:
 
 
 
-def _buckets_for(spark: SparkSession, terms: list[str]) -> list[int]:
+def _buckets_for(terms: list[str]) -> list[int]:
     """Partition-prune list for a bounded term list: each term's stored
     bucket, recomputed with the same hash the writers used
     (``pmod(xxhash64(term), N_BUCKETS)``) — driver-side via the
@@ -227,7 +227,7 @@ def bm25_topk_indexed(
     avgdl = float(totals["tot_tokens"]) / float(n_docs)
 
     terms = [r["term"] for r in query_terms.select("term").distinct().collect()]
-    buckets = _buckets_for(spark, terms)
+    buckets = _buckets_for(terms)
     postings = postings_live.filter(F.col("bucket").isin(buckets))
     doclens = doclens_live
     p = postings.alias("p")
@@ -368,7 +368,7 @@ def live_term_df(
     recover_batch_store(spark, state_dir, list(_DEL_LAYOUT))
     hi = below if below is not None else 1 << 62
     postings, _, _ = _live_components(spark, state_dir, hi)
-    buckets = _buckets_for(spark, terms)
+    buckets = _buckets_for(terms)
     return (
         postings.filter(F.col("bucket").isin(buckets))
         .groupBy("term")

@@ -217,25 +217,3 @@ def read_quality_state(
     return read_bucketed_state(
         spark, state_dir, schema=QUALITY_SCHEMA, below=below
     )
-
-
-def maintain_quality_stats(
-    docs: DataFrame,
-    *,
-    state_dir: str,
-    checkpoint: str,
-    compact_every: int | None = COMPACT_EVERY,
-) -> None:
-    """Drain everything currently available through the quality-score
-    maintainer (availableNow trigger)."""
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda df, bid: apply_quality_batch(
-                df, bid, state_dir=state_dir, compact_every=compact_every
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -323,22 +323,6 @@ def interval_join(
     )
 
 
-def run_available_now(
-    df: DataFrame, *, sink_table: str, checkpoint: str, output_mode: str = "append"
-) -> None:
-    """Drain everything currently available through a memory sink and stop —
-    the batch-boundary trigger used by tests and backfills."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def idempotent_parquet_sink(
     df: DataFrame,
     *,

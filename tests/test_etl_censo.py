@@ -6,7 +6,8 @@ Golden rules checked (FIXTURES.md §Golden-output rules):
 3. NU_/QT_ → IntegerType, malformed → NULL
 4. DT_ → DateType per the year's format, malformed → NULL
 5. pre-2019 escolas: OR-merge present + sources dropped; renames per intent
-6. union of shards preserves row counts
+6. shard row counts add up: checked in test_census_job.py and
+   test_properties.py, where one scan reads every shard
 7. hive-partitioned output; small tables 1 file per partition
 """
 
@@ -24,7 +25,6 @@ from censo_escolar_spark.etl.maps import alias_maps, composite_key_map, load_map
 from censo_escolar_spark.etl.pipeline import (
     missing_partitions,
     transform_table,
-    union_shards,
 )
 from censo_escolar_spark.sources.readers import load_csv_with_schema
 from censo_escolar_spark.sources.writers import (
@@ -182,14 +182,6 @@ def test_conventions_post2019_no_drift_logic(spark, escolas_fixture):
     assert rows["11000002"]["CO_LINGUA_INDIGENA_1"] is None
 
 
-def test_union_shards_preserves_counts(spark):
-    shards = [
-        spark.createDataFrame([(i, f"r{i}")] * n, "id int, region string")
-        for i, n in enumerate([10, 5, 3, 1, 1])
-    ]
-    assert union_shards(shards).count() == 20
-
-
 def test_partitioned_write_and_incremental(spark, tmp_path):
     sink = str(tmp_path / "escolas_out")
     df = spark.createDataFrame(
@@ -270,15 +262,6 @@ def test_external_table_ddl_and_full_refresh(spark, tmp_path):
         C.full_refresh(spark, {"escolas_ext": path}, partition_cols=("NU_ANO_CENSO",))
     assert spark.sql("SELECT COUNT(*) AS n FROM escolas_ext").first().n == 3
     C.drop_table(spark, "escolas_ext")
-
-
-def test_prefix_columns(spark):
-    from censo_escolar_spark.etl.pipeline import prefix_columns
-
-    df = spark.createDataFrame([(1, "x")], "a int, b string")
-    out = prefix_columns(df, "esc")
-    assert out.columns == ["esc_a", "esc_b"]
-    assert out.first().esc_a == 1
 
 
 def test_convention_engine_full_width_single_projection(spark):

@@ -6,9 +6,14 @@ seconds)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+import os
+import tempfile
 
-from censo_escolar_spark.etl.pipeline import apply_conventions, union_shards
+from hypothesis import given, settings, strategies as st
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from censo_escolar_spark.etl.pipeline import apply_conventions
+from censo_escolar_spark.sources.readers import load_csv_with_schema
 
 # Census cells: printable-ish strings incl. numerics, blanks, unicode.
 cell = st.one_of(
@@ -70,18 +75,36 @@ def test_convention_rules_hold_for_arbitrary_cells(spark, rows, tricky):
         assert r["NU_X"] == expected_nu, f"int rule broke for {nu!r}"
 
 
+SHARD_SCHEMA = StructType(
+    [StructField("id", LongType(), True), StructField("v", StringType(), True)]
+)
+
+
 @settings(max_examples=20, deadline=None)
 @given(
     st.lists(
-        st.lists(st.tuples(st.integers(0, 10**6), st.text(max_size=8)), max_size=20),
+        st.lists(
+            st.tuples(
+                st.integers(0, 10**6),
+                st.text(alphabet="abcxyz0123456789çã日", min_size=1, max_size=8),
+            ),
+            max_size=20,
+        ),
         min_size=1,
         max_size=5,
-    )
+    ),
+    st.integers(0, 5),
 )
-def test_union_shards_preserves_all_rows(spark, shards):
-    dfs = [
-        spark.createDataFrame(shard or [(0, "")], "id long, v string")
-        for shard in shards
-    ]
-    expected = sum(max(len(s), 1) for s in shards)
-    assert union_shards(dfs).count() == expected
+def test_one_scan_over_shards_keeps_every_data_row(spark, shards, at):
+    """A table's shard files read in ONE scan (etl.job.load_year_table)
+    return the shards' data rows and nothing else: each file's header is
+    dropped, a header-only shard adds no row."""
+    shards.insert(at % (len(shards) + 1), [])
+    with tempfile.TemporaryDirectory() as d:
+        paths = []
+        for i, shard in enumerate(shards):
+            paths.append(os.path.join(d, f"shard_{i}.csv"))
+            with open(paths[-1], "w", encoding="utf-8") as f:
+                f.write("id|v\n" + "".join(f"{k}|{v}\n" for k, v in shard))
+        got = load_csv_with_schema(spark, paths, SHARD_SCHEMA).collect()
+    assert sorted(tuple(r) for r in got) == sorted(r for s in shards for r in s)

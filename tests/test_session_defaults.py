@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
+import censo_escolar_spark
 from censo_escolar_spark.plans.events import e45_state_partitions
 from censo_escolar_spark.session import MAX_DEFAULT_HEAP_MB, local_resources
 
@@ -34,3 +38,18 @@ def test_e45_state_partitions_follow_the_slots():
     assert e45_state_partitions(4) == 4
     assert e45_state_partitions(1) == 4
     assert e45_state_partitions(20) == 10
+
+
+def test_package_reads_only_the_deployment_variables():
+    """The engine's only environment settings are the host sizing ones;
+    a measurement knob belongs in the script that measures."""
+    root = pathlib.Path(censo_escolar_spark.__file__).parent
+    names = {
+        node.value
+        for path in root.rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("SPARK_GRAFT_")
+    }
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
